@@ -32,6 +32,12 @@ def pk_repartition(df: DataFrame, schema: Schema, num_partitions: int | None = N
 
     Falls back to all columns if the table declares no PK (same effect as the
     reference hashing the whole row).
+
+    The composer runs it in front of every sink whose
+    ``needs_pk_partitioning`` is True: the distributed writers (lake,
+    parquet, jdbc, kafka, ...) need all changes of one key in one task.
+    ``MemorySink`` opts out: it collects the batch to the driver and
+    sorts it by ``__seq``, so the shuffle would only add a Spark job.
     """
     keys = [c for c in schema.primary_keys if c in df.columns] or [
         c.name for c in schema.columns if c.name in df.columns

@@ -9,9 +9,9 @@ Spark-first architecture: per (micro-)batch the driver runs the **control
 plane** (schema events: registry update → transform schema derivation →
 route → behavior rewrite → sink MetadataApplier), and builds ONE Catalyst
 plan for the **data plane** (select/where transform → route fan-out/merge →
-coercion select → PK repartition → sink write). The reference's
-SchemaOperator/SchemaCoordinator/FlushEvent RPC machinery collapses into the
-batch boundary (SURVEY.md §3.3).
+coercion select → PK repartition, for sinks that need it → sink write).
+The reference's SchemaOperator/SchemaCoordinator/FlushEvent RPC machinery
+collapses into the batch boundary (SURVEY.md §3.3).
 """
 
 from __future__ import annotations
@@ -322,9 +322,9 @@ class PipelineExecution:
             coerced = coercion_select(
                 transformed, evolved,
                 keep_extra=(OP_COL, META_COL, SEQ_COL) + tz_extras)
-            write_schema = evolved
-            partitioned = pk_repartition(coerced, write_schema, self.parallelism)
-            self.sink.write(sink_tid, partitioned, write_schema, self._sink_batch_id())
+            if self.sink.needs_pk_partitioning:
+                coerced = pk_repartition(coerced, evolved, self.parallelism)
+            self.sink.write(sink_tid, coerced, evolved, self._sink_batch_id())
 
     # -- driver loop ------------------------------------------------------
     def run(self) -> "PipelineExecution":

@@ -40,6 +40,13 @@ class MetadataApplier(abc.ABC):
 
 
 class DataSink(abc.ABC):
+    #: whether the composer hash-partitions each batch on the primary key
+    #: (``pk_repartition``) before ``write``: distributed writers need all
+    #: changes of one key in one task. A sink that collects the batch to
+    #: the driver and orders it by ``__seq`` itself sets this False and
+    #: saves the shuffle.
+    needs_pk_partitioning: bool = True
+
     def begin_batch(self, batch_id) -> None:
         """Called by the streaming runner at the START of each micro-batch
         delivery — including a same-process re-delivery of a failed batch.

@@ -83,6 +83,10 @@ def _eval_default(col) -> object:
 
 
 class MemorySink(DataSink):
+    # write() collects to the driver and sorts by __seq: a key shuffle
+    # in front of it buys nothing
+    needs_pk_partitioning = False
+
     def __init__(self) -> None:
         self.schemas: dict[TableId, Schema] = {}
         self.state: dict[TableId, dict[tuple, dict]] = {}
